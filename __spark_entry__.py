@@ -109,7 +109,7 @@ def q_knn_tile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_footprint_aoi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon×polygon flagship variant: scene FOOTPRINT quads (WKB)
-    intersecting AOIs via cover-cell explode + exact polygon refine
+    intersecting AOIs via one Arrow pass (cover probe + exact polygon refine)
     (SURVEY §2.3 row 1, the aoi_footprint_join operator). The oracle
     reduces to bbox-interval predicates because the derived footprints
     are axis-aligned boxes."""

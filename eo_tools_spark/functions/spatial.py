@@ -17,7 +17,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F
-from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, BooleanType, DoubleType, LongType, StringType
 
 from eo_tools_spark.geo import cells as C
 from eo_tools_spark.geo import geom as G
@@ -81,18 +81,104 @@ def tile_id_sql(lon_expr: str, lat_expr: str) -> str:
     )
 
 
+def _split_rows(rows: np.ndarray, values: np.ndarray, m: int) -> pd.Series:
+    """(row, value) pairs sorted by row → one array per row 0..m-1."""
+    if m == 0:
+        return pd.Series([], dtype=object)
+    return pd.Series(np.split(values, np.searchsorted(rows, np.arange(1, m))))
+
+
 @F.pandas_udf(ArrayType(LongType()))
 def cover_cells_udf(wkb_s: pd.Series, res_s: pd.Series) -> pd.Series:
     """Polygon WKB → covering cell ids (Arrow-batched).
 
     Used when footprints live in a *large* table (burst quads per image);
-    for small AOI tables the cover is computed driver-side instead.
+    for small AOI tables the cover is computed driver-side instead. Per
+    row: ``cover_polygon`` of the first member ring, in its cell order —
+    computed for the whole batch by the batch decode and the vectorized
+    bbox cover, grouped by resolution and vertex count.
     """
-    out = []
-    for wkb, res in zip(wkb_s, res_s):
-        ring = W.wkb_to_coords(bytes(wkb))[0]
-        out.append(C.cover_polygon(ring, int(res)).tolist())
-    return pd.Series(out)
+    res_v = res_s.to_numpy(dtype=np.int64)
+    rows, cells = [], []
+    for g in W.wkb_rings_batch(wkb_s.to_numpy()):
+        first = g.parts == 0
+        g_rows, g_rings = g.rows[first], g.rings[first]
+        g_res = res_v[g_rows]
+        for r in np.unique(g_res):
+            sel = np.flatnonzero(g_res == r)
+            ix, c = C.cover_rings(g_rings[sel], int(r))
+            rows.append(g_rows[sel][ix])
+            cells.append(c)
+    rows = np.concatenate(rows + [np.empty(0, np.int64)])
+    cells = np.concatenate(cells + [np.empty(0, np.int64)])
+    order = np.argsort(rows, kind="stable")
+    return _split_rows(rows[order], cells[order], len(wkb_s))
+
+
+def aoi_cover_index(rings: list[np.ndarray], res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Driver-side AOI cover packed for probing: every ring's
+    ``cover_polygon`` cells at ``res`` as one sorted int64 array plus the
+    parallel array of AOI indices (positions in ``rings``)."""
+    covers = [C.cover_polygon(r, res) for r in rings]
+    cells = np.concatenate(covers + [np.empty(0, np.int64)]).astype(np.int64)
+    owner = np.repeat(np.arange(len(covers), dtype=np.int64), [len(c) for c in covers])
+    order = np.argsort(cells, kind="stable")
+    return cells[order], owner[order]
+
+
+def footprint_aoi_matches(
+    wkbs,
+    cover_cells: np.ndarray,
+    cover_owner: np.ndarray,
+    rings: list[np.ndarray],
+    res: int,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One batch of footprint WKB × the packed AOI cover → the unique
+    ``(row, aoi_index)`` pairs, sorted, whose geometries intersect.
+
+    Every member polygon of a row is covered at ``res`` (``cover_rings``),
+    probed against the sorted cover with ``searchsorted``, and each unique
+    (member, AOI) candidate refined by the exact ``polygons_intersect``
+    kernel, one call per AOI and vertex count. A row matches an AOI when
+    any of its members does.
+    """
+    naoi = max(len(rings), 1)
+    hit_keys = []
+    for g in W.wkb_rings_batch(wkbs):
+        ring_ix, cells = C.cover_rings(g.rings, res)
+        lo = np.searchsorted(cover_cells, cells, side="left")
+        cnt = np.searchsorted(cover_cells, cells, side="right") - lo
+        # expand each probe's [lo, lo+cnt) range of cover entries
+        start = np.cumsum(cnt) - cnt
+        pos = np.repeat(lo - start, cnt) + np.arange(cnt.sum())
+        key = np.unique(np.repeat(ring_ix, cnt) * naoi + cover_owner[pos])
+        cand_ring, cand_aoi = key // naoi, key % naoi
+        for a in np.unique(cand_aoi):
+            sel = cand_ring[cand_aoi == a]
+            ok = G.polygons_intersect(g.rings[sel], rings[a])
+            hit_keys.append(g.rows[sel[ok]] * naoi + a)
+    key = np.unique(np.concatenate(hit_keys + [np.empty(0, np.int64)]))
+    return key // naoi, key % naoi
+
+
+def make_aoi_match_udf(aois: dict[str, np.ndarray], res: int):
+    """Footprint WKB → ``array<string>`` of the AOI ids it intersects, in
+    one Arrow-batched pass (``footprint_aoi_matches`` per batch).
+
+    The packed AOI cover and the rings ride in the UDF closure: no cover
+    DataFrame, no broadcast job, no join."""
+    ids = np.array(list(aois), dtype=object)
+    rings = [np.asarray(r, dtype=np.float64) for r in aois.values()]
+    cover_cells, cover_owner = aoi_cover_index(rings, res)
+
+    @F.pandas_udf(ArrayType(StringType()))
+    def aoi_match(wkb_s: pd.Series) -> pd.Series:
+        rows, aoi = footprint_aoi_matches(
+            wkb_s.to_numpy(), cover_cells, cover_owner, rings, res
+        )
+        return _split_rows(rows, ids[aoi], len(wkb_s))
+
+    return aoi_match
 
 
 @F.pandas_udf(ArrayType(DoubleType()))
@@ -182,17 +268,3 @@ def make_pip_refine_udf(rings_by_id: dict):
         return pd.Series(res)
 
     return pip_refine
-
-
-def make_poly_intersects_udf(rings_by_id: dict):
-    """Exact polygon×polygon intersects refine (footprint WKB vs AOI)."""
-
-    @F.pandas_udf(BooleanType())
-    def poly_refine(aoi_id: pd.Series, fp_wkb: pd.Series) -> pd.Series:
-        out = np.zeros(len(aoi_id), dtype=bool)
-        for i, (aid, wkb) in enumerate(zip(aoi_id, fp_wkb)):
-            ring = W.wkb_to_coords(bytes(wkb))[0]
-            out[i] = G.polygon_intersects(ring, rings_by_id[aid])
-        return pd.Series(out)
-
-    return poly_refine

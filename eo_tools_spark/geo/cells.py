@@ -86,13 +86,23 @@ def cell_bounds(cell) -> np.ndarray:
     return np.stack([minx, miny, minx + w, miny + h], axis=-1)
 
 
+def _bbox_index_range(minx, miny, maxx, maxy, res: int):
+    """Closed cell-index ranges ``(ix0, ix1, iy0, iy1)`` of bboxes at
+    ``res``, elementwise over scalars or arrays."""
+    n = np.int64(1) << res
+
+    def index(v, offset, span):
+        return np.clip(np.floor((v + offset) * n / span), 0, n - 1).astype(np.int64)
+
+    return (
+        index(minx, 180.0, 360.0), index(maxx, 180.0, 360.0),
+        index(miny, 90.0, 180.0), index(maxy, 90.0, 180.0),
+    )
+
+
 def cover_bbox(minx: float, miny: float, maxx: float, maxy: float, res: int) -> np.ndarray:
     """All cells at ``res`` whose box intersects the bbox (closed)."""
-    n = np.int64(1) << res
-    ix0 = int(np.clip(np.floor((minx + 180.0) * n / 360.0), 0, n - 1))
-    ix1 = int(np.clip(np.floor((maxx + 180.0) * n / 360.0), 0, n - 1))
-    iy0 = int(np.clip(np.floor((miny + 90.0) * n / 180.0), 0, n - 1))
-    iy1 = int(np.clip(np.floor((maxy + 90.0) * n / 180.0), 0, n - 1))
+    ix0, ix1, iy0, iy1 = _bbox_index_range(minx, miny, maxx, maxy, res)
     ix = np.arange(ix0, ix1 + 1, dtype=np.int64)
     iy = np.arange(iy0, iy1 + 1, dtype=np.int64)
     gx, gy = np.meshgrid(ix, iy, indexing="ij")
@@ -123,6 +133,38 @@ def cover_polygon(ring: np.ndarray, res: int, exact: bool = True) -> np.ndarray:
         if polygon_intersects(ring, box):
             keep.append(c)
     return np.array(keep, dtype=np.int64)
+
+
+def cover_rings(rings: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """``cover_polygon`` over a stack of rings ((m, n, 2), one vertex
+    count) → ``(ring_index, cell)`` pairs, ordered by ring and, within a
+    ring, in ``cover_polygon``'s own cell order.
+
+    The bbox cells use ``cover_bbox``'s index arithmetic, vectorized
+    across rings. Rings whose bbox spans more than 4 cells take the exact
+    ``cover_polygon`` one by one, the same rule ``cover_polygon`` applies.
+    """
+    lo, hi = rings.min(axis=1), rings.max(axis=1)
+    ix0, ix1, iy0, iy1 = _bbox_index_range(lo[:, 0], lo[:, 1], hi[:, 0], hi[:, 1], res)
+    ny = iy1 - iy0 + 1
+    count = (ix1 - ix0 + 1) * ny
+    # ≤ 4 bbox cells: slot k of cover_bbox's ij-raveled grid is
+    # (ix0 + k // ny, iy0 + k % ny)
+    k = np.arange(4, dtype=np.int64)
+    valid = k[None, :] < count[:, None]
+    ix = ix0[:, None] + k[None, :] // ny[:, None]
+    iy = iy0[:, None] + k[None, :] % ny[:, None]
+    small = count <= 4
+    valid &= small[:, None]
+    idx = [np.nonzero(valid)[0]]
+    cells = [((np.int64(res) << _RES_SHIFT) | (ix << _IX_SHIFT) | iy)[valid]]
+    for i in np.flatnonzero(~small):
+        c = cover_polygon(rings[i], res)
+        idx.append(np.full(len(c), i, dtype=np.int64))
+        cells.append(c)
+    idx, cells = np.concatenate(idx), np.concatenate(cells)
+    order = np.argsort(idx, kind="stable")
+    return idx[order], cells[order]
 
 
 def cover_polygon_classified(ring: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:

@@ -112,6 +112,81 @@ def polygon_intersects(a: np.ndarray, b: np.ndarray) -> bool:
     return False
 
 
+def _orient_v(ax, ay, bx, by, cx, cy) -> np.ndarray:
+    """``_segments_intersect``'s orientation sign, elementwise: the same
+    float expression, NaN (like any non-positive, non-zero value) → -1."""
+    v = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
+    return np.where(v > 0, 1, np.where(v == 0, 0, -1)).astype(np.int8)
+
+
+def _on_seg_v(ax, ay, bx, by, cx, cy) -> np.ndarray:
+    return (
+        (np.minimum(ax, bx) <= cx) & (cx <= np.maximum(ax, bx))
+        & (np.minimum(ay, by) <= cy) & (cy <= np.maximum(ay, by))
+    )
+
+
+def _open_rings_intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Edge-crossing ∪ containment of open rings a (m, k, 2) vs open ring
+    b (nb, 2): ``polygon_intersects`` after its bbox reject, per row."""
+    ax, ay = a[:, :, 0], a[:, :, 1]
+    ax2, ay2 = np.roll(ax, -1, axis=1), np.roll(ay, -1, axis=1)
+    nb = len(b)
+    hit = np.zeros(len(a), dtype=bool)
+    for j in range(nb):  # loop over the one ring's edges only (tiny)
+        q1x, q1y = b[j]
+        q2x, q2y = b[(j + 1) % nb]
+        o1 = _orient_v(ax, ay, ax2, ay2, q1x, q1y)
+        o2 = _orient_v(ax, ay, ax2, ay2, q2x, q2y)
+        o3 = _orient_v(q1x, q1y, q2x, q2y, ax, ay)
+        o4 = _orient_v(q1x, q1y, q2x, q2y, ax2, ay2)
+        seg = (
+            ((o1 != o2) & (o3 != o4))
+            | ((o1 == 0) & _on_seg_v(ax, ay, ax2, ay2, q1x, q1y))
+            | ((o2 == 0) & _on_seg_v(ax, ay, ax2, ay2, q2x, q2y))
+            | ((o3 == 0) & _on_seg_v(q1x, q1y, q2x, q2y, ax, ay))
+            | ((o4 == 0) & _on_seg_v(q1x, q1y, q2x, q2y, ax2, ay2))
+        )
+        hit |= seg.any(axis=1)
+    # first vertex of each a inside b: the same ray-casting call, over rows
+    hit |= points_in_polygon(ax[:, 0], ay[:, 0], b)
+    # first vertex of b inside each a: ray casting vectorized over rings.
+    # A closing vertex that repeats the first adds a zero-length edge,
+    # which never crosses the ray, so it needs no second strip here.
+    x, y = b[0]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cond = (ay > y) != (ay2 > y)
+        xin = (ax2 - ax) * (y - ay) / (ay2 - ay) + ax
+    hit |= np.logical_xor.reduce(cond & (x < xin), axis=1)
+    return hit
+
+
+def polygons_intersect(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Row-wise ``polygon_intersects(a[i], b)`` for a stack of rings a
+    ((m, n, 2), one vertex count, each open or closed) against one ring b.
+
+    Same float arithmetic as the scalar kernel — bbox reject, closed
+    orientation and on-segment tests, the two first-vertex even-odd
+    tests — vectorized across the m rings, so its answers are identical
+    row for row, degenerate touching/collinear inputs included."""
+    a = np.asarray(a, dtype=np.float64)
+    b = np.asarray(b, dtype=np.float64)
+    m, n = a.shape[:2]
+    out = np.zeros(m, dtype=bool)
+    lo, hi = a.min(axis=1), a.max(axis=1)
+    cand = bbox_intersects(
+        lo[:, 0], lo[:, 1], hi[:, 0], hi[:, 1],
+        b[:, 0].min(), b[:, 1].min(), b[:, 0].max(), b[:, 1].max(),
+    )
+    b_open = b[:-1] if np.array_equal(b[0], b[-1]) else b
+    closed = (a[:, 0] == a[:, -1]).all(axis=1) if n > 1 else np.zeros(m, dtype=bool)
+    for is_closed, k in ((True, n - 1), (False, n)):
+        sel = np.flatnonzero(cand & (closed == is_closed))
+        if len(sel):
+            out[sel] = _open_rings_intersect(a[sel, :k], b_open)
+    return out
+
+
 def clip_convex(subject: np.ndarray, clip: np.ndarray) -> np.ndarray:
     """Sutherland–Hodgman: clip ``subject`` ring by CONVEX ``clip`` ring.
 

@@ -12,6 +12,7 @@ with geopandas/shapely/DuckDB-spatial externally.
 from __future__ import annotations
 
 import struct
+from typing import NamedTuple
 
 import numpy as np
 
@@ -33,6 +34,12 @@ def polygon_to_wkb(coords) -> bytes:
     for x, y in pts:
         out.append(struct.pack("<dd", x, y))
     return b"".join(out)
+
+
+def multipolygon_to_wkb(members) -> bytes:
+    """members: sequence of exterior rings, one per member polygon."""
+    parts = [polygon_to_wkb(m) for m in members]
+    return struct.pack("<BII", 1, _WKB_MULTIPOLYGON, len(parts)) + b"".join(parts)
 
 
 def box_to_wkb(minx: float, miny: float, maxx: float, maxy: float) -> bytes:
@@ -94,6 +101,64 @@ def wkb_to_coords(wkb: bytes) -> list[np.ndarray]:
             out.append(first)
         return out
     raise ValueError(f"unsupported WKB geometry type {gtype}")
+
+
+_POLY_HEADER = 13  # byte order, type, ring count, vertex count
+
+
+class RingGroup(NamedTuple):
+    """Exterior rings of one vertex count decoded from a batch of WKB.
+
+    ``rings`` is (m, n, 2) float64 lon/lat; ``rows`` (m,) is the input row
+    each ring came from and ``parts`` (m,) its member index within that
+    row (0 for a Polygon, 0..k-1 for the members of a MultiPolygon)."""
+
+    rows: np.ndarray
+    parts: np.ndarray
+    rings: np.ndarray
+
+
+def wkb_rings_batch(wkbs) -> list[RingGroup]:
+    """Decode a batch of WKB geometries → exterior rings grouped by
+    vertex count (ascending), each group ordered by (row, part).
+
+    Single-ring little-endian polygons — every footprint the engine
+    writes — are decoded with one ``np.frombuffer`` per byte length (a
+    packed record dtype over the concatenated blobs), so the per-row
+    Python cost is a ``len`` and a join. Anything else (MultiPolygon,
+    holes, points, EWKB) goes through ``wkb_to_coords`` row by row and
+    yields one ring per member, exactly as ``wkb_to_coords`` returns them.
+    """
+    vals = np.asarray(wkbs, dtype=object)
+    lens = np.fromiter(map(len, vals), dtype=np.int64, count=len(vals))
+    by_n: dict[int, list[tuple[np.ndarray, np.ndarray, np.ndarray]]] = {}
+    slow = [np.empty(0, np.int64)]
+    for L in np.unique(lens):
+        idx = np.flatnonzero(lens == L)
+        n, rem = divmod(int(L) - _POLY_HEADER, 16)
+        if n < 1 or rem:
+            slow.append(idx)
+            continue
+        rec = np.frombuffer(
+            b"".join(vals[idx]),
+            dtype=np.dtype(
+                [("bo", "u1"), ("t", "<u4"), ("nr", "<u4"), ("n", "<u4"), ("xy", "<f8", (n, 2))]
+            ),
+        )
+        ok = (rec["bo"] == 1) & (rec["t"] == _WKB_POLYGON) & (rec["nr"] == 1) & (rec["n"] == n)
+        slow.append(idx[~ok])
+        by_n.setdefault(n, []).append((idx[ok], np.zeros(int(ok.sum()), np.int64), rec["xy"][ok]))
+    for i in np.concatenate(slow):
+        for part, ring in enumerate(wkb_to_coords(bytes(vals[i]))):
+            by_n.setdefault(len(ring), []).append(
+                (np.array([i]), np.array([part]), ring[None].astype(np.float64))
+            )
+    out = []
+    for n in sorted(by_n):
+        rows, parts, rings = (np.concatenate(z) for z in zip(*by_n[n]))
+        order = np.lexsort((parts, rows))
+        out.append(RingGroup(rows[order], parts[order], rings[order]))
+    return out
 
 
 def wkb_bounds(wkb: bytes) -> tuple[float, float, float, float]:

@@ -304,33 +304,30 @@ def aoi_footprint_join(
 ) -> DataFrame:
     """Inner join footprint-polygon rows × AOIs on ``intersects``.
 
-    The big side's covers come from an Arrow UDF + explode (a footprint
-    spans several cells) → broadcast equi-join on cell → distinct pair →
-    exact polygon∩polygon refine. This is the burst-footprint×AOI join
-    of process.py:321-323 re-expressed.
-    """
-    spark = footprints.sparkSession
-    cover_df, _ = build_aoi_cover(spark, aois, res)
-    refine = S.make_poly_intersects_udf(aois)
+    The burst-footprint×AOI join of process.py:321-323 re-expressed as
+    ONE Arrow-batched pass over the footprint column. The driver packs
+    every AOI's ``cover_polygon`` at ``res`` into a sorted cell array that
+    rides in the UDF closure (no cover frame, no broadcast job, no join).
+    Per batch the kernel decodes the WKB in bulk, covers each member
+    polygon with vectorized bbox arithmetic, probes the AOI cover with
+    ``searchsorted`` and refines the unique (footprint, AOI) candidates
+    with the vectorized exact ``polygons_intersect``. A MultiPolygon
+    (e.g. an antimeridian-split burst) matches when any member does.
+    The matched AOI ids are exploded to one row each.
 
-    with_cells = footprints.withColumn(
-        "_cells", S.cover_cells_udf(F.col(wkb_col), F.lit(res))
-    ).withColumn("_cell", F.explode("_cells")).drop("_cells")
-    # refine FIRST, dedupe AFTER: when id_cols don't uniquely key the
-    # footprint rows (e.g. many scene rows per (product, subswath,
-    # burst)), a pre-refine dropDuplicates keeps an ARBITRARY survivor
-    # per id — possibly a non-intersecting footprint — and the refine
-    # then drops an id that a discarded duplicate would have matched
-    # (found at sf0.1: burst 5 of a product vanished from the partial
-    # plan). Post-refine dedup is also strictly cheaper: the exchange
-    # carries only refine-survivors.
+    Dedupe AFTER the exact match: when id_cols don't uniquely key the
+    footprint rows (e.g. many scene rows per (product, subswath, burst)),
+    the id must survive if ANY of its footprints intersects — the sf0.1
+    regression a pre-refine dropDuplicates once caused.
+
+    Output: footprint columns + ``aoi_id``, one row per distinct
+    ``id_cols + aoi_id`` (all footprint columns when ``id_cols`` is None).
+    """
+    match = S.make_aoi_match_udf(aois, res)
     dedup_cols = (id_cols or footprints.columns) + ["aoi_id"]
-    cand = (
-        with_cells.join(F.broadcast(cover_df), with_cells["_cell"] == cover_df["cell"])
-        .drop("_cell", "cell", "boundary")
-    )
-    out = cand.where(refine(F.col("aoi_id"), F.col(wkb_col))).dropDuplicates(
-        dedup_cols
+    out = (
+        footprints.withColumn("aoi_id", F.explode(match(F.col(wkb_col))))
+        .dropDuplicates(dedup_cols)
     )
     if require_nonempty and out.isEmpty():
         raise EmptyJoinError("No burst intersects the AOI")

@@ -22,7 +22,7 @@ Reference surface (/root/reference/eo_tools/S1/download.py):
 
 At 100 TB the planning side is the part that must scale: the burst
 catalog is millions of rows (every product × subswath × burst), so
-selection runs through the engine's cover-cell broadcast join
+selection runs through the engine's one-pass cover-probe footprint join
 (spatial_join.aoi_footprint_join) — no driver-side geometry loop; only
 the ≤ (products × 6) job rows ever reach the driver, and only when a
 manifest or a fetch loop asks for them.
@@ -126,7 +126,7 @@ def stac_search(
     relative_orbit:int, orbit_state:string, footprint:binary (WKB),
     plus any asset columns passed through. Validation contracts and the
     output schema mirror the reference exactly; the spatial predicate
-    runs through the engine's cover-cell broadcast join, so this scales
+    runs through the engine's one-pass cover-probe footprint join, so it scales
     to a full-mission catalog (~10M products) without a driver loop.
     """
     ring = validate_single_ring(intersects, "intersects")

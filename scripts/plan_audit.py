@@ -52,6 +52,14 @@ class Check:
     def count(self, pat: str) -> int:
         return len(re.findall(pat, self.plan))
 
+    def node(self, name: str, detail: str) -> str | None:
+        """The formatted-plan detail block of the first ``name`` node
+        whose details match ``detail``, or None."""
+        for block in re.findall(rf"(?m)^\(\d+\) {name}\b.*\n(?:.+\n?)*", self.plan):
+            if re.search(detail, block):
+                return block
+        return None
+
 
 def main() -> int:
     from pyspark.sql import functions as F
@@ -373,30 +381,40 @@ def main() -> int:
     c = Check(
         "q16 partial-download planning (STAC seam)",
         q16,
-        "burst×AOI cover join broadcast; pol expansion and assets join "
-        "broadcast (jobs side is tiny after burst_range); source scan "
-        "column-pruned to the two orders columns the scene derivation "
-        "needs; zero per-row Python (footprint WKB construction is the "
-        "only Python, Arrow-batched).",
+        "burst×AOI footprint match is ONE Arrow pass (cover probe and "
+        "exact refine inside the kernel, the AOI cover rides in its "
+        "closure: no cover broadcast, no cover join); pol expansion and "
+        "assets join broadcast (jobs side is tiny after burst_range); "
+        "source scan column-pruned to the two orders columns the scene "
+        "derivation needs; zero per-row Python (footprint WKB "
+        "construction is the only other Python, Arrow-batched).",
     )
-    c.expect("AOI cover is broadcast", c.has(r"BroadcastExchange"))
+    n_arrow = c.count(r"(?m)^\(\d+\) ArrowEvalPython")
+    c.expect(
+        "footprint match is one Arrow pass",
+        n_arrow == 1,
+        f"ArrowEvalPython nodes = {n_arrow}",
+    )
     c.expect(
         "pol expansion is a broadcast cross join",
         c.has(r"BroadcastNestedLoopJoin"),
     )
+    assets_join = c.node(
+        "BroadcastHashJoin", r"Right keys \[3\]: \[product_id#\d+, subswath#\d+, pol#"
+    )
     c.expect(
-        "assets join is broadcast (no shuffle of the jobs side)",
-        c.count(r"BroadcastHashJoin") >= 2,
-        f"broadcast hash joins = {c.count(r'BroadcastHashJoin')}",
+        "assets join on (product_id, subswath, pol) is a left-outer "
+        "BroadcastHashJoin (no shuffle of the jobs side)",
+        assets_join is not None and "Join type: LeftOuter" in assets_join,
     )
     c.expect(
         "orders scan prunes to the derivation columns",
         c.has(r"ReadSchema: struct<o_orderkey:bigint,o_custkey:bigint>"),
     )
-    c.expect("footprint kernel is Arrow-batched", c.has(r"MapInPandas"))
+    c.expect("footprint WKB construction is Arrow-batched", c.has(r"MapInPandas"))
     c.expect("no per-row Python UDF", not c.has(r"BatchEvalPython"))
     c.expect(
-        "shuffles: candidate dedup + burst_range agg only",
+        "shuffles: match dedup + burst_range agg only",
         c.count(r"Arguments: hashpartitioning") <= 3,
         f"hash exchanges = {c.count(r'Arguments: hashpartitioning')}",
     )

@@ -176,3 +176,123 @@ def test_sql_parity():
             f"SELECT {cell_id_sql('lon', 'lat', res)} AS c FROM pts"
         ).df()["c"].to_numpy()
         np.testing.assert_array_equal(got, expected)
+
+
+# ---- batch kernels: row-for-row parity with the scalar kernels
+
+def _quads(rng, m, spread, size):
+    """m random (possibly self-crossing) closed quads, shape (m, 5, 2)."""
+    c = rng.uniform(-spread, spread, (m, 1, 2))
+    q = c + rng.uniform(-size, size, (m, 4, 2))
+    return np.concatenate([q, q[:, :1]], axis=1)
+
+
+_CONVEX = np.array([[0, 0], [4, 0], [5, 3], [2, 5], [-1, 3], [0, 0]], dtype=float)
+_CONCAVE = np.array(
+    [[-3, -3], [3, -3], [3, 3], [0, 0.5], [-3, 3], [-3, -3]], dtype=float
+)
+_OPEN = np.array([[-2, -1], [1, -2], [2, 2], [-1, 3]], dtype=float)  # no closing vertex
+
+
+def _scalar(a, b):
+    return np.array([polygon_intersects(x, b) for x in a])
+
+
+class TestPolygonsIntersectParity:
+    @pytest.mark.parametrize("ring", [_CONVEX, _CONCAVE, _OPEN, box(0, 0, 2, 2)])
+    @pytest.mark.parametrize("size", [0.3, 1.5, 6.0])
+    def test_random_quads(self, ring, size):
+        from eo_tools_spark.geo.geom import polygons_intersect
+
+        a = _quads(np.random.default_rng(7), 600, 6.0, size)
+        got = polygons_intersect(a, ring)
+        np.testing.assert_array_equal(got, _scalar(a, ring))
+        assert 0 < got.sum() < len(a)
+        # open footprint rings (no closing vertex) take the same answers
+        np.testing.assert_array_equal(polygons_intersect(a[:, :4], ring), got)
+
+    @pytest.mark.parametrize("ring", [_CONVEX, _CONCAVE, _OPEN, box(0, 0, 2, 2)])
+    def test_integer_grid_degenerates(self, ring):
+        """Integer vertices on the rings' own lattice: shared vertices,
+        touching and collinear overlapping edges, zero-area quads."""
+        from eo_tools_spark.geo.geom import polygons_intersect
+
+        g = np.random.default_rng(3).integers(-4, 6, (1500, 4, 2)).astype(float)
+        a = np.concatenate([g, g[:, :1]], axis=1)
+        np.testing.assert_array_equal(polygons_intersect(a, ring), _scalar(a, ring))
+
+    def test_named_degenerate_cases(self):
+        from eo_tools_spark.geo.geom import polygons_intersect
+
+        b = box(0, 0, 2, 2)
+        cases = {
+            "touching edge": (box(2, 0, 3, 2), True),
+            "shared vertex": (box(2, 2, 3, 3), True),
+            "collinear overlap": (box(1, 2, 4, 3), True),
+            "inside b": (box(0.5, 0.5, 1.5, 1.5), True),
+            "contains b": (box(-1, -1, 3, 3), True),
+            "near miss": (box(2.0000001, 0, 3, 2), False),
+            "bbox overlap only": (
+                np.array([[1.5, 2.6], [3, 1.1], [3, 3], [2.5, 3], [1.5, 2.6]]), False
+            ),
+        }
+        a = np.stack([r for r, _ in cases.values()])
+        got = polygons_intersect(a, b)
+        np.testing.assert_array_equal(got, _scalar(a, b))
+        np.testing.assert_array_equal(got, [e for _, e in cases.values()])
+        # the roles swapped: each case as the single ring, b as the stack
+        for ring, expect in cases.values():
+            assert polygons_intersect(b[None], ring)[0] == expect
+
+    def test_footprints_spanning_many_cells(self):
+        """Large quads whose bbox spans > 4 cells at the join resolution."""
+        from eo_tools_spark.geo.geom import polygons_intersect
+
+        a = _quads(np.random.default_rng(11), 300, 20.0, 12.0)
+        assert (_bbox_cell_count(a, 7) > 4).mean() > 0.9
+        np.testing.assert_array_equal(
+            polygons_intersect(a, _CONCAVE), _scalar(a, _CONCAVE)
+        )
+
+
+def _bbox_cell_count(rings, res):
+    lo, hi = rings.min(axis=1), rings.max(axis=1)
+    return np.array([len(cover_bbox(*lo[i], *hi[i], res)) for i in range(len(rings))])
+
+
+class TestBatchCover:
+    @pytest.mark.parametrize(
+        "res,size", [(3, 25.0), (5, 8.0), (7, 0.05), (7, 1.0), (9, 0.05), (9, 0.3)]
+    )
+    def test_cover_rings_equals_cover_polygon(self, res, size):
+        from eo_tools_spark.geo.cells import cover_rings
+
+        a = _quads(np.random.default_rng(res), 200, 30.0, size)
+        idx, cells = cover_rings(a, res)
+        assert np.all(np.diff(idx) >= 0)
+        if size >= 1.0:  # the exact-cover rule for > 4 bbox cells runs
+            assert (_bbox_cell_count(a, res) > 4).any()
+        for i, ring in enumerate(a):
+            # same cells in the same order, row by row
+            np.testing.assert_array_equal(cells[idx == i], cover_polygon(ring, res))
+
+    def test_wkb_rings_batch_matches_wkb_to_coords(self):
+        from eo_tools_spark.geo.wkb import multipolygon_to_wkb, wkb_rings_batch
+
+        rng = np.random.default_rng(5)
+        q = _quads(rng, 6, 10.0, 1.0)
+        wkbs = [
+            polygon_to_wkb(q[0]),
+            point_to_wkb(1.0, 2.0),
+            multipolygon_to_wkb([q[1], q[2][:4]]),
+            polygon_to_wkb(q[3]),
+            box_to_wkb(0, 0, 1, 1),
+            polygon_to_wkb(np.vstack([q[4][:4], [[9.0, 9.0]]])),  # 6 vertices
+        ]
+        seen = 0
+        for g in wkb_rings_batch(wkbs):
+            assert g.rings.shape[1:] == (len(g.rings[0]), 2)
+            for row, part, ring in zip(g.rows, g.parts, g.rings):
+                np.testing.assert_array_equal(ring, wkb_to_coords(wkbs[row])[part])
+                seen += 1
+        assert seen == sum(len(wkb_to_coords(w)) for w in wkbs)

@@ -128,6 +128,70 @@ def test_footprint_join_matches_numpy_oracle(spark):
     assert len(exp) > 10
 
 
+def test_footprint_join_matches_any_multipolygon_member(spark):
+    """An antimeridian-split burst is a MultiPolygon; it intersects an AOI
+    when ANY member does — here only the second member reaches it."""
+    from eo_tools_spark.geo.wkb import multipolygon_to_wkb
+
+    aoi = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float)
+
+    def sq(x, y):
+        return [(x, y), (x + 0.3, y), (x + 0.3, y + 0.2), (x, y + 0.2)]
+
+    rows = [
+        (1, bytearray(multipolygon_to_wkb([sq(50, 50), sq(4, 4)]))),  # member 2 in
+        (2, bytearray(multipolygon_to_wkb([sq(4, 4), sq(50, 50)]))),  # member 1 in
+        (3, bytearray(multipolygon_to_wkb([sq(50, 50), sq(60, 60)]))),  # none
+        (4, bytearray(box_to_wkb(9.9, 9.9, 12.0, 12.0))),  # plain polygon
+    ]
+    fp = spark.createDataFrame(rows, "burst int, footprint binary")
+    out = aoi_footprint_join(fp, {"a": aoi}, res=8, id_cols=["burst"])
+    got = {(r.burst, r.aoi_id) for r in out.select("burst", "aoi_id").collect()}
+    assert got == {(1, "a"), (2, "a"), (4, "a")}
+
+
+def test_footprint_join_plan_is_one_arrow_pass(spark):
+    """Cover probe and exact refine run in ONE Arrow UDF: no second
+    Python pass, no broadcast cover join; the only exchange is the
+    post-match dedup."""
+    rows = [(i, bytearray(box_to_wkb(i, i, i + 0.3, i + 0.2))) for i in range(20)]
+    fp = spark.createDataFrame(rows, "burst int, footprint binary")
+    aoi = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float)
+    out = aoi_footprint_join(fp, {"a": aoi, "b": aoi + 5}, res=8, id_cols=["burst"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
+    assert "BroadcastHashJoin" not in plan
+    assert plan.count("hashpartitioning") == 1
+    assert out.count() == 11 + 11
+
+
+def test_cover_cells_udf_is_cover_polygon_per_row():
+    """The batch cover kernel behind cover_cells_udf returns, per row,
+    ``cover_polygon`` of the first member ring, cells in the same order —
+    across mixed resolutions, vertex counts, MultiPolygons and footprints
+    whose bbox spans more than 4 cells."""
+    import pandas as pd
+
+    from eo_tools_spark.functions.spatial import cover_cells_udf
+    from eo_tools_spark.geo import cover_polygon, wkb_to_coords
+    from eo_tools_spark.geo.wkb import multipolygon_to_wkb
+
+    rng = np.random.default_rng(9)
+    wkbs, res = [], []
+    for i in range(300):
+        c = rng.uniform(-60, 60, 2)
+        ring = c + rng.uniform(-1, 1, (4 + i % 3, 2)) * (0.1 if i % 2 else 3.0)
+        wkbs.append(
+            multipolygon_to_wkb([ring, ring + 5]) if i % 7 == 0 else polygon_to_wkb(ring)
+        )
+        res.append(5 + i % 4)
+    got = cover_cells_udf.func(pd.Series(wkbs), pd.Series(res))
+    assert len(got) == len(wkbs)
+    for w, r, cells in zip(wkbs, res, got):
+        np.testing.assert_array_equal(cells, cover_polygon(wkb_to_coords(w)[0], r))
+
+
 def test_convex_refine_is_pure_jvm(spark, sf_dir):
     """For convex AOIs the whole flagship plan is JVM-side: no
     ArrowEvalPython / BatchEvalPython anywhere."""
